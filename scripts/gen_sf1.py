@@ -28,7 +28,7 @@ Usage: python3 scripts/gen_sf1.py [outDir]
 Then:  SPARK_GRAFT_SF_DIR=<outDir> sbt "runMain graft.Bench"
        (compare per-query vs bench_out.json; >15x for 10x data on a
        query without a documented quadratic contract = investigate)
-and:   sbt "runMain graft.tools.AsOfAb <outDir> 4" for the as-of paths.
+(The as-of A/B main tools/AsOfAb that also read this dir is deleted; source at commit 60fc5df.)
 
 Requires duckdb + numpy (the driver-side python env has both). Runtime
 ~2-3 min. Uses no network.

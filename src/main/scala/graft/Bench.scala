@@ -1,24 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core on the box (the driver benches at local[32])
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark otherwise rejects
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide flat-column expressions (64-dim embeddings) make Catalyst
-      // constraint propagation quadratic-to-exponential; plans carry
-      // explicit filters, so inferred constraints are expendable
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // session warmup: JVM/codegen/scheduler init shouldn't bill the
     // first measured query
@@ -159,10 +144,7 @@ object Bench {
     // timing dominate), which is indistinguishable from an ignored env var
     // unless the JSON itself records what the session ran with
     val parallelism = spark.sparkContext.defaultParallelism
-    // env var is free text ("*" is a legal local master spec): numbers
-    // stay JSON numbers, anything else is emitted quoted
-    val cpusJson = scala.util.Try(cpus.trim.toInt.toString).getOrElse(q(cpus))
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpusJson,"parallelism":$parallelism,"queries":$qs,"errors":$errJson,"canary":$canary,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"parallelism":$parallelism,"queries":$qs,"errors":$errJson,"canary":$canary,"sf":"$sfDir"}"""
     // durable copy the driver (or a human) can read even if stdout is
     // truncated; r5's report was lost to exactly that
     try java.nio.file.Files.write(
@@ -181,6 +163,6 @@ object Bench {
     val slowest = results.toSeq.sortBy(-_._2).take(20)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpusJson,"parallelism":$parallelism,"queries":$slowest,"errors":$errJson,"canary":$canary,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"parallelism":$parallelism,"queries":$slowest,"errors":$errJson,"canary":$canary,"sf":"$sfDir"}""")
   }
 }

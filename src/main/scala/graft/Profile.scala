@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only profiling harness: runs selected queries repeatedly to
   * separate cold cost (analysis + codegen + JIT) from warm execution.
@@ -11,24 +10,14 @@ object Profile {
     val reps = if (args.length > 1) args(1).toInt else 3
     val names =
       if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     // extra session confs for A/B experiments, e.g.
     // SPARK_GRAFT_CONF="spark.sql.codegen.wholeStage=false;spark.sql.adaptive.enabled=false"
     val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
       .split(';').filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
       }
-    var b = SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-    extra.foreach { case (k, v) => b = b.config(k, v) }
-    val spark = b.getOrCreate()
+    val spark = extra.foldLeft(GraftSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
     spark.range(1000000L).selectExpr("sum(id)").collect()
     names.foreach { name =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for fast local
     // iteration (the driver always passes exactly two args)
     val only = if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ISO backup keys contain ':'; avoid local ChecksumFileSystem .crc
-      // sibling paths (HADOOP-14829) for the backup/restore queries.
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark otherwise rejects
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide flat-column expressions (64-dim embeddings) make Catalyst
-      // constraint propagation quadratic-to-exponential; plans carry
-      // explicit filters, so inferred constraints are expendable
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

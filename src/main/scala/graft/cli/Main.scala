@@ -379,23 +379,11 @@ object Main {
   private def session(cfg: Map[String, String] = Map.empty): SparkSession = {
     val s3 = try S3Settings.hadoopConf(cfg)
     catch { case e: IllegalArgumentException => die(e.getMessage) }
-    var b = SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark otherwise rejects
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide flat-column expressions (64-dim embeddings) make Catalyst
-      // constraint propagation quadratic-to-exponential; plans carry
-      // explicit filters, so inferred constraints are expendable
-      .config("spark.sql.constraintPropagation.enabled", "false")
+    val b = graft.GraftSession.builder().appName("graft")
+    sys.env.get("SPARK_MASTER").foreach(b.master)
     // the reference's S3 surface (ACLs, SSE, storage class, headers,
     // endpoint/credentials) lands as s3a options on this session
-    s3.foreach { case (k, v) => b = b.config(s"spark.hadoop.$k", v) }
+    s3.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -487,8 +475,9 @@ object Main {
           lit(topic).as("topic"),
           (col("user_id") % 8).cast("int").as("partition"),
           col("event_id").as("offset"), // monotonic source id as offset
-          base64(col("user_id").cast("string").cast("binary")).as("key"),
-          base64(col("props").cast("binary")).as("value"),
+          ReducedConsumerRecord.base64Unchunked(
+            col("user_id").cast("string").cast("binary")).as("key"),
+          ReducedConsumerRecord.base64Unchunked(col("props").cast("binary")).as("value"),
           graft.model.Tables.tsMillisCol(schema("ts").dataType).as("timestamp"),
           lit(0).as("timestamp_type"))
       val q = graft.streaming.StreamingBackup.start(

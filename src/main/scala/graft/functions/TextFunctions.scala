@@ -71,7 +71,4 @@ object TextFunctions {
 
   /** Cosine similarity given precomputed norms. */
   def cosine(dot: Column, normA: Column, normB: Column): Column = dot / (normA * normB)
-
-  /** L2 norm of a float-array column. */
-  def l2Norm(v: Column): Column = sqrt(dotProduct(v, v))
 }

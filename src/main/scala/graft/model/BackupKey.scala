@@ -65,8 +65,6 @@ object BackupKey {
     loop(name)
   }
 
-  def isGzipped(key: String): Boolean = key.endsWith(".gz")
-
   /** Hadoop-safe child path: ISO keys contain `:` which `new Path(parent,
     * child)` would misparse as a URI scheme; a full string path whose first
     * `:` follows a `/` parses correctly.

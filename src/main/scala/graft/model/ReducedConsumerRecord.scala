@@ -1,6 +1,7 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge}
+import org.apache.spark.sql.catalyst.expressions.Base64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -50,6 +51,15 @@ object ReducedConsumerRecord {
   def toJsonColumn: Column =
     to_json(struct(wireColumns: _*), Map("ignoreNullFields" -> "false"))
 
+  /** Base64 of the bytes in `c` on one unbroken line. Spark's `base64()`
+    * follows `spark.sql.chunkBase64String.enabled`, which by default
+    * breaks its output with CRLF every 76 characters; the reference
+    * decodes with `java.util.Base64.getDecoder`, which rejects line
+    * breaks. This encoder never chunks, whatever the session conf says.
+    */
+  def base64Unchunked(c: Column): Column =
+    GraftExprBridge.toColumn(Base64(GraftExprBridge.toExpression(c), chunkBase64 = false))
+
   /** Map the harness `events` table into the record schema (FIXTURES.md §4):
     * one logical topic, partitions hash-bucketed by user, per-partition
     * offsets assigned by event order, payloads Base64 encoded.
@@ -75,19 +85,10 @@ object ReducedConsumerRecord {
         lit(topic).as("topic"),
         col("partition"),
         col("offset"),
-        base64(col("user_id").cast(StringType).cast(BinaryType)).as("key"),
-        base64(col("props").cast(BinaryType)).as("value"),
+        base64Unchunked(col("user_id").cast(StringType).cast(BinaryType)).as("key"),
+        base64Unchunked(col("props").cast(BinaryType)).as("value"),
         tsMillis.as("timestamp"),
         lit(0).as("timestamp_type")
       )
-  }
-
-  /** Typed view over a wire-named DataFrame. */
-  def toDataset(df: DataFrame)(implicit spark: SparkSession): Dataset[ReducedConsumerRecord] = {
-    import spark.implicits._
-    df.select(
-      col("topic"), col("partition"), col("offset"), col("key"),
-      col("value"), col("timestamp"), col("timestamp_type").as("timestampType")
-    ).as[ReducedConsumerRecord]
   }
 }

@@ -186,19 +186,7 @@ object AnalyticsQueries {
     * Output identical to [[asofJoinViaWindow]] (AsOfJoinSpec pins
     * equality AND both plan shapes); the same DuckDB oracle gates both.
     */
-  def asofJoin(spark: SparkSession, dir: String): DataFrame =
-    asofJoinPinned(spark, dir, broadcast = None)
-
-  /** [[asofJoin]] with the physical path pinned — `Some(false)` forces
-    * the co-partitioned merge exec, `Some(true)` the broadcast index,
-    * `None` auto-selects. Exists for the A/B scale probes
-    * ([[graft.tools.AsOfAb]]): at 10× data the right side crosses the
-    * broadcast threshold and auto flips to merge, so measuring both
-    * paths at both scales needs the override. Same output all paths.
-    */
-  def asofJoinPinned(
-      spark: SparkSession, dir: String,
-      broadcast: Option[Boolean]): DataFrame = {
+  def asofJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = pq(spark, dir, "events")
       .select(col("user_id"), expr("ts div 1000000").as("ts_ms"), col("event_id"))
     val ord = pq(spark, dir, "orders")
@@ -208,8 +196,7 @@ object AnalyticsQueries {
       ev, ord,
       leftKeys = Seq(ev("user_id")), rightKeys = Seq(ord("o_custkey")),
       leftTime = ev("ts_ms"), rightTime = ord("odate_ms"),
-      rightTiebreak = Seq(ord("o_orderkey")),
-      broadcast = broadcast)
+      rightTiebreak = Seq(ord("o_orderkey")))
       .select(col("event_id"), col("user_id"), col("ts_ms"),
         col("o_orderkey").as("asof_orderkey"), col("o_total").as("asof_total"))
       .orderBy("event_id")
@@ -2035,7 +2022,7 @@ object AnalyticsQueries {
     * [lo, hi]), so the gate is scale-free across SFs. Effectiveness
     * (the cell filter alone passes ~10% of rows, and `ZOrder.layout`
     * files are skipped on BOTH dimensions) is measured in ZOrderSpec
-    * and tools/ZOrderAb, not here.
+    * and tools/ZOrderAb (deleted; source at commit 60fc5df), not here.
     */
   def zorderPrune(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.ZOrder

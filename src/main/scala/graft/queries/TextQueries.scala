@@ -258,7 +258,8 @@ object TextQueries {
     * round-11 sf1 point this query scales 10× data → 2.2–7× time.
     *
     * r15 re-measured the "prefix loses below its crossover" premise
-    * (tools/ContainAb, same session, min of 2 after warm, sf0.1): the
+    * (tools/ContainAb, deleted; source at commit 60fc5df; same
+    * session, min of 2 after warm, sf0.1): the
     * prefix arm reads 3.0–3.8s while BOTH unbounded candidate forms —
     * the plain inverted-index self-join and the bucket-grouped
     * expansion — read 5.5s. The crossover has moved BELOW sf0.1 on the
@@ -339,7 +340,8 @@ object TextQueries {
     * prefix 31.5s (11.6x, near-linear). The crossover sits BEFORE sf1;
     * beyond it the prefix path is the only affordable exact path,
     * where bucket sizes, not scan constants, dominate. Round 13's
-    * decomposition (tools/SimJoinProbe) showed the residual sf1 cost
+    * decomposition (tools/SimJoinProbe, deleted; source at commit 60fc5df)
+    * showed the residual sf1 cost
     * was CANDIDATE-bound (118,826 -> 17.0M candidates for 10x data vs
     * FLAT output) and added the length + positional residuals below:
     * candidates drop 9.3x at sf0.1 / 7.9x at sf1, wall-clock at sf1
@@ -383,7 +385,8 @@ object TextQueries {
     //    rank on each side); require 9·ub >= 4·(n1+n2). A true pair's
     //    first-shared-gram row satisfies this by construction, so the
     //    pair survives the distinct even when its later-rank rows are
-    //    pruned. The r12 sf1 decomposition (tools/SimJoinProbe) showed
+    //    pruned. The r12 sf1 decomposition (tools/SimJoinProbe,
+    //    deleted; source at commit 60fc5df) showed
     //    candidates growing 143x for 10x data against FLAT output —
     //    these residuals are evaluated in-join (no extra exchange) and
     //    cut exactly that term.
@@ -2952,8 +2955,8 @@ object TextQueries {
     * selection from scratch (the exact double-compute a persisted index
     * exists to remove). The frame persists MEMORY_AND_DISK — it is the
     * ~2/(w+1)-winnowed projection, far smaller than the corpus — and
-    * stays cached for the session like a loaded nightly artifact would;
-    * [[dropWinnowCache]] releases it. Keyed by dir, so tests and
+    * stays cached for the session like a loaded nightly artifact would.
+    * Keyed by dir, so tests and
     * multi-corpus sessions never cross-contaminate; index semantics are
     * snapshot-at-build, matching the durable artifact contract.
     */
@@ -2982,12 +2985,6 @@ object TextQueries {
     f
   }
 
-  /** Release every memoized winnow frame held by `spark`. */
-  def dropWinnowCache(spark: SparkSession): Unit =
-    winnowMemo.keys.filter(_._1 eq spark).foreach { k =>
-      winnowMemo.remove(k).foreach(_.unpersist())
-    }
-
   /** Winnowing overlap detection — what MOSS actually does with the
     * fingerprints: doc pairs sharing at least one SELECTED hash, with
     * the shared-fingerprint count as the overlap signal. The guarantee
@@ -2999,7 +2996,8 @@ object TextQueries {
     * exact verify (array_intersect on candidates) composes exactly as
     * in the prefix/LSH paths.
     *
-    * Scale adjudication (r13, tools/SimJoinProbe): this query is
+    * Scale adjudication (r13, tools/SimJoinProbe, deleted; source at commit 60fc5df):
+    * this query is
     * OUTPUT-bound — its answer (every pair sharing >= 1 fingerprint)
     * is 98% of its expanded pair rows at both sf0.1 and sf1 and itself
     * grows 91x for 10x data on the fixed-vocabulary test corpus. The
@@ -3224,7 +3222,8 @@ object TextQueries {
     * tempting one-pass form — a capped posting-collect aggregate
     * yielding multiplicity + complete (doc_id, p) postings in one
     * exchange, the [[winnowOverlapRouted]] pattern — was built and
-    * measured 1.4–1.6× SLOWER here (tools/R15Ab, same session,
+    * measured 1.4–1.6× SLOWER here (tools/R15Ab, deleted; source at commit 60fc5df;
+    * same session,
     * construction + noop action, min of 2: mark form 3.0–3.6s vs
     * census 4.9s at sf0.1). The census pays a typed ObjectHashAggregate
     * with per-buffer list encoders over EVERY gram occurrence

@@ -45,8 +45,8 @@ object StreamingBackup {
         col("topic"),
         col("partition"),
         col("offset"),
-        base64(col("key")).as("key"),
-        base64(col("value")).as("value"),
+        ReducedConsumerRecord.base64Unchunked(col("key")).as("key"),
+        ReducedConsumerRecord.base64Unchunked(col("value")).as("value"),
         unix_millis(col("timestamp")).as("timestamp"),
         col("timestampType").as("timestamp_type"))
 

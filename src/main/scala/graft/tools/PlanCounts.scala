@@ -1,15 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object PlanCounts {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().withExtensions(new graft.GraftExtensions).master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
+    // 4 cores: the PlanSpec exchange ledger is recorded at local[4]
+    val spark = graft.GraftSession.builder(cores = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

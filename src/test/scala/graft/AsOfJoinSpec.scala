@@ -376,7 +376,8 @@ class AsOfJoinSpec extends SparkSuite {
 
   test("skew detection fires on the hot-key fixture, stays silent on uniform keys") {
     val rnd = new scala.util.Random(12L)
-    // the AsOfSkewAb shape at spec scale: 90% of facts on key 1
+    // the tools/AsOfSkewAb shape (deleted; source at commit 60fc5df) at spec scale:
+    // 90% of facts on key 1
     val hotRows = (0 until 2000).map { i =>
       val k = if (i % 10 == 0) rnd.nextInt(4) + 2L else 1L
       (k, rnd.nextInt(5000).toLong, i.toLong)

@@ -50,6 +50,25 @@ class BackupRestoreSpec extends SparkSuite {
       """{"topic":"t","partition":1,"offset":9,"key":null,"value":"dg==","timestamp":6,"timestamp_type":1}""")
   }
 
+  test("fromEvents -> backupBatch writes Base64 that java.util.Base64.getDecoder accepts") {
+    // Spark's base64() breaks lines every 76 characters by default; the
+    // reference decodes with the strict decoder, which rejects CR and LF.
+    // 58 bytes encode to 80 characters, 200 bytes to 268.
+    val payloads = Seq(58, 200).map(n => (0 until n).map(i => ('a' + i % 26).toChar).mkString)
+    val userIds = Seq(1234567890123456789L, 42L)
+    val events = payloads.zip(userIds).zipWithIndex.map { case ((p, u), i) =>
+      (i.toLong, u, p, 1700000000000L * 1000000L + i)
+    }.toDF("event_id", "user_id", "props", "ts")
+    val dir = tmpDir("backup-base64")
+    BackupEngine.backupBatch(
+      ReducedConsumerRecord.fromEvents(events), dir, ChronoUnitSlice(ChronoUnit.HOURS))
+    val written = RestoreEngine.readObjects(spark, dir, RestoreEngine.listKeys(spark, dir))
+      .select("key", "value").collect()
+    def decode(s: String) = new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
+    assert(written.map(r => (decode(r.getString(0)), decode(r.getString(1)))).toSet ==
+      userIds.map(_.toString).zip(payloads).toSet)
+  }
+
   test("batch backup refuses a dir with prior slice objects, at job start") {
     val in = genRecords(50)
     val dir = tmpDir("backup-refuse")

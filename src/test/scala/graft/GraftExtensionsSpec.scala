@@ -8,6 +8,16 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class GraftExtensionsSpec extends SparkSuite {
 
+  test("the suite session carries GraftSession's shared settings") {
+    assert(spark.sql("SELECT rolling_hash('abc')").head().getLong(0) ==
+      graft.functions.RollingHash.hash("abc".getBytes("UTF-8")))
+    assert(spark.conf.get("spark.sql.constraintPropagation.enabled") == "false")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sessionState.conf.sessionLocalTimeZone == "UTC")
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
+      "org.apache.hadoop.fs.RawLocalFileSystem")
+  }
+
   test("size(array_intersect) fuses to intersect_size with exact parity") {
     import org.apache.spark.sql.functions.{array_intersect, col, size}
     import spark.implicits._

@@ -617,7 +617,8 @@ class PlanSpec extends SparkSuite {
       "p_doremi_weights" -> 0,
       // gram multiplicity agg (partials absorb boilerplate-gram skew)
       // + per-doc cover collect; the mark join broadcasts. r15 built
-      // and A/B-rejected a one-pass posting-census form (tools/R15Ab:
+      // and A/B-rejected a one-pass posting-census form (tools/R15Ab,
+      // deleted; source at commit 60fc5df:
       // 1.4-1.6x slower — typed-buffer aggregate over every occurrence
       // beats the saved second derivation only in the winnowed family)
       "d_substring_scrub" -> 2,

@@ -6,23 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder().withExtensions(new graft.GraftExtensions)
-      .master("local[4]")
+    // 4 cores: the PlanSpec exchange ledger is recorded at local[4]
+    val s = GraftSession.builder(cores = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
-      // ISO backup keys contain ':'; local ChecksumFileSystem builds .crc
-      // sibling Paths that misparse them (HADOOP-14829). Raw local FS has
-      // no checksum siblings; object stores (s3a/gs) are unaffected.
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark otherwise rejects
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide flat-column expressions (64-dim embeddings) make Catalyst
-      // constraint propagation quadratic-to-exponential; plans carry
-      // explicit filters, so inferred constraints are expendable
-      .config("spark.sql.constraintPropagation.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
